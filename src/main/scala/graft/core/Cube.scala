@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.concurrent.TrieMap
@@ -33,13 +34,18 @@ object CellValue {
 /** An N-dimensional cube (≙ `cube.py:65`): an ordered list of [[Dimension]]s
   * plus a fact DataFrame with schema `(d0:Int, …, dN-1:Int, value:Double)`
   * holding base-level cells only. Aggregated cells are computed on read as
-  * broadcast closure-join + weighted sum — the Spark-native replacement for
-  * the reference's write-time ancestor inverted index (`cube.py:542-549`):
-  * fan-out happens at join time on executors, not at write time.
+  * a closure lookup + weighted sum — the Spark-native replacement for the
+  * reference's write-time ancestor inverted index (`cube.py:542-549`):
+  * fan-out happens at read time on executors, not at write time. The
+  * closure subset a read needs enters the fact stage as a hash-lookup
+  * expression ([[selectedFacts]]), not as a broadcast join, so a cell read
+  * is one aggregation with no broadcast job, and every address of one
+  * shape shares one generated class.
   *
   * Writes land in a driver-side overlay (point upserts/deletes) merged into
-  * the fact frame lazily; `compact()` materializes. Any write invalidates the
-  * whole result cache (≙ `cube.py:510-511`).
+  * the fact frame lazily (a lookup filter plus a union, [[facts]]);
+  * `compact()` materializes. Any write invalidates the whole result cache
+  * (≙ `cube.py:510-511`).
   */
 final class Cube(
     val name: String,
@@ -242,12 +248,13 @@ final class Cube(
   // history is actually enabled (it sits on the per-write hot path)
   private def recordHistory(label: => String): Unit = historyOpt.foreach(_.record(label))
 
-  // ---- closure tables (broadcast dimension metadata) ----------------------
+  // ---- closure tables (dimension metadata as frames) ----------------------
 
   private val closureDfs = mutable.Map[Int, DataFrame]()
 
-  /** (anc, leaf, weight) DataFrame for dimension `i`; driver-built, small,
-    * always used under `broadcast()`.
+  /** (anc, leaf, weight) DataFrame for dimension `i`; driver-built, small.
+    * The SQL face of the closure (`Database` registers it as a temp view);
+    * read plans probe the dimension's closure index instead.
     */
   def closureDf(i: Int): DataFrame = stateLock.synchronized { closureDfs.getOrElseUpdate(i, {
     require(!dimensions(i).isDegenerate,
@@ -290,13 +297,11 @@ final class Cube(
 
   private def decimalValues: Boolean = valueField.dataType.isInstanceOf[DecimalType]
 
-  /** Weight column for a joined closure; cast to decimal when the fact value
+  /** Closure weight as a value factor; cast to decimal when the fact value
     * is decimal so weighted sums stay EXACT (order-independent).
     */
-  private[graft] def weightExpr: Column =
-    if (decimalValues) col("weight").cast("decimal(10,4)") else col("weight")
-
-  private[graft] def needsWeight(i: Int): Boolean = !unitWeightDim(i)
+  private def weightOf(w: Column): Column =
+    if (decimalValues) w.cast("decimal(10,4)") else w
 
   // ---- address resolution -------------------------------------------------
 
@@ -324,24 +329,36 @@ final class Cube(
 
   /** The merged fact frame (base + overlay, overlay wins) — a consistent
     * snapshot taken under the state lock; the returned frame is immutable,
-    * so jobs planned from it run lock-free.
+    * so jobs planned from it run lock-free. The overlay enters as an
+    * expression, not a join: base rows whose address the overlay holds are
+    * filtered out by a [[graft.functions.RefLookup]] membership probe, and
+    * the upserted rows are unioned in. The frame is memoized per
+    * (base, overlay) state, so every read between two writes shares it.
     */
   def facts: DataFrame = stateLock.synchronized {
     if (overlay.isEmpty) base
     else {
-      val rows = overlay.toSeq.map { case (ids, v) =>
-        Row.fromSeq(ids.map(Int.box) :+ v.map(Double.box).orNull)
+      if (!((mergedBase eq base) && (mergedOverlay eq overlay))) {
+        val rows = overlay.iterator.collect { case (ids, Some(v)) =>
+          Row.fromSeq(ids.map(Int.box) :+ Double.box(v))
+        }.toList
+        val schema = StructType(dimCols.map(StructField(_, IntegerType)) :+
+          StructField("value", DoubleType))
+        val delta = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+        val deltaCast =
+          if (valueField.dataType == DoubleType) delta
+          else delta.withColumn("value", col("value").cast(valueField.dataType))
+        val written = graft.functions.RefLookup.contains(dimCols.map(col),
+          overlay.keys.map(_.toArray))
+        merged = base.filter(written.isNull).unionByName(deltaCast)
+        mergedBase = base; mergedOverlay = overlay
       }
-      val schema = StructType(dimCols.map(StructField(_, IntegerType)) :+
-        StructField("value", DoubleType))
-      val delta = spark.createDataFrame(spark.sparkContext.parallelize(rows.toList, 1), schema)
-      val deltaCast =
-        if (valueField.dataType == DoubleType) delta
-        else delta.withColumn("value", col("value").cast(valueField.dataType))
-      base.join(broadcast(deltaCast.select(dimCols.map(col): _*)), dimCols, "left_anti")
-        .unionByName(deltaCast.filter(col("value").isNotNull))
+      merged
     }
   }
+  private var merged: DataFrame = null
+  private var mergedBase: DataFrame = null
+  private var mergedOverlay: scala.collection.immutable.HashMap[Vector[Int], Option[Double]] = null
 
   /** RAW bulk swap of the fact frame — a hook-BYPASSING primitive, on
     * purpose: every in-package caller (Area transforms/copies/enumeration,
@@ -441,7 +458,7 @@ final class Cube(
     */
   private def swapCompacted(label: String, midMaterialize: () => Unit,
       materialize: DataFrame => DataFrame,
-      onAbort: DataFrame => Unit): Boolean = {
+      onAbort: DataFrame => Unit, prunes: Set[Int] = Set.empty): Boolean = {
     // guards every compactTo* face: compacting a snapshot would rewrite a
     // layout for the as-of SUBSET under a live-looking name — the same
     // silent-divergence class the cell-write guard rejects
@@ -454,6 +471,7 @@ final class Cube(
     val swapped = stateLock.synchronized {
       if (base eq base0) {
         base = newBase
+        if (prunes.nonEmpty) layoutDims.put(newBase, prunes)
         val inc = incorporated.toMap
         overlay = overlay.filter { case (k, v) => !inc.get(k).contains(v) }
         true
@@ -520,7 +538,8 @@ final class Cube(
           .saveAsTable(table)
         spark.table(table)
       },
-      onAbort = _ => ()) // the written table is left behind
+      onAbort = _ => (), // the written table is left behind
+      prunes = dimCols.indices.toSet)
 
   /** Compact to a PARTITIONED parquet table on the given dimensions' id
     * columns — the calendar-slice layout, complementing
@@ -552,7 +571,8 @@ final class Cube(
         // canonical order (positional unions in merge paths depend on it)
         spark.table(table).select(factSchema.fieldNames.map(col).toIndexedSeq: _*)
       },
-      onAbort = _ => ()) // the written table is left behind
+      onAbort = _ => (), // the written table is left behind
+      prunes = partitionDims.toSet)
   }
 
   /** Compact to a Z-ORDERED parquet table: facts range-partitioned and
@@ -589,7 +609,8 @@ final class Cube(
           .saveAsTable(table)
         spark.table(table).select(factSchema.fieldNames.map(col).toIndexedSeq: _*)
       },
-      onAbort = _ => ()) // the written table is left behind
+      onAbort = _ => (), // the written table is left behind
+      prunes = zDims.toSet)
   }
 
   /** Incremental z-ordered store backing (set by [[compactToZorderedStore]],
@@ -642,7 +663,8 @@ final class Cube(
           .select(factSchema.fieldNames.map(col).toIndexedSeq: _*)
         built
       },
-      onAbort = _ => ())
+      onAbort = _ => (),
+      prunes = zDims.toSet)
     if (ok) stateLock.synchronized {
       // the WRITE options serve both faces of later appends (read-side
       // ignores the writer-only uniform-key property)
@@ -704,6 +726,7 @@ final class Cube(
           "appendZorderedStore — the store holds the batch but the swap is " +
           "refused; re-run compactToZorderedStore to re-sync")
       base = newBase; zStoreBase = newBase
+      layoutDims.put(newBase, zDims.toSet)
       // overlay entries were NOT incorporated (the append merges files,
       // not the overlay) — they stay and keep winning over the new base
       stateVersion += 1; logBulk(); cache.clear()
@@ -1012,40 +1035,107 @@ final class Cube(
     }
   }
 
-  /** Weighted rollup of one aggregated cell: per aggregated dimension a
-    * broadcast closure join contributes its weight; leaf dimensions are plain
-    * pushed-down filters (≙ `cube.py:440-497` + `facttable.py:190-231`).
+  /** Weighted rollup of one aggregated cell: the single-member-per-dimension
+    * case of [[selectedFacts]], summed (≙ `cube.py:440-497` +
+    * `facttable.py:190-231`).
     */
   private def rollup(ids: Vector[Int]): Option[Double] = {
-    var df = facts
-    var weightCols = List.empty[Column]
-    ids.zipWithIndex.foreach { case (id, i) =>
-      if (dimensions(i).isDegenerate) {
-        // leaf = pushed-down filter on the raw key; the "all" rollup needs
-        // NO closure (and none exists) — just don't filter this dimension
-        if (id != Dimension.DegenerateAllId) df = df.filter(col(s"d$i") === id)
-      } else if (dimensions(i).levelOf(id) == 0) {
-        df = df.filter(col(s"d$i") === id)
-      } else if (dimensions(i).coversAllLeavesUnit(id)) {
-        // identity rollup (full coverage at unit weight — the top `All`):
-        // the closure join would match every row exactly once with weight
-        // 1, so skip it. Contract: facts addressing members REMOVED from
-        // the catalog are undefined until purgeUnknownMembers()
-        // (ARCHITECTURE §1) — the join was never a reliable orphan filter,
-        // since leaf point reads don't closure-join either.
-      } else {
-        val cl = closureDf(i).filter(col("anc") === id)
-          .select(col("leaf").as(s"leaf_$i"), weightExpr.as(s"w_$i"))
-        df = df.join(broadcast(cl), col(s"d$i") === col(s"leaf_$i"))
-        if (needsWeight(i)) weightCols ::= col(s"w_$i")
-      }
-    }
+    val (df, weightCols) = selectedFacts(ids.zipWithIndex.map { case (id, i) => i -> Seq(id) })
     if (weightCols.nonEmpty) bump(4)
     val weighted = weightCols.foldLeft(col("value"))(_ * _)
     df.agg(sum(weighted)).collect().headOption.flatMap(r => Option(r.get(0)).map {
       case d: java.lang.Double => d.doubleValue()
       case bd: java.math.BigDecimal => bd.doubleValue()
     })
+  }
+
+  // ---- read plans: the closure subset as expressions ----------------------
+
+  /** Dimensions the backing layout prunes on, per base frame: the partition
+    * dims of [[compactToPartitioned]], the z dims of [[compactToZordered]]/
+    * [[compactToZorderedStore]], every dim of a [[compactToBucketed]] table.
+    * Keyed by the frame itself (weakly), so a base restored by undo keeps
+    * its entry and a superseded one drops out.
+    */
+  private val layoutDims = new java.util.WeakHashMap[DataFrame, Set[Int]]()
+
+  /** The one selection step behind every read plan — [[rollup]],
+    * [[gridAggregate]] and `Rules.baseRuleGrid`: restrict the merged facts
+    * to the selected members of each listed dimension, adding grid key
+    * `a<i>` (the requested member a fact row rolls up to), and return the
+    * weight factors the value must be multiplied by (head = last
+    * dimension, the order the product has always been taken in).
+    *
+    * Per dimension:
+    *  - degenerate: the all-member is a constant key; the leaf-all sentinel
+    *    keys by the raw column; raw keys probe a key table;
+    *  - a single identity cover ([[Dimension.coversAllLeavesUnit]]) or a
+    *    selection of every leaf needs no predicate at all;
+    *  - anything else probes the closure subset — one (anc, weight) entry
+    *    per (leaf, selected ancestor) — built from the dimension's
+    *    per-ancestor closure index. A leaf under several selected members
+    *    fans out to one row each.
+    *
+    * The driver-resident relations enter as [[graft.functions.RefLookup]]
+    * expressions, not broadcast joins: no broadcast job, and the member
+    * ids reach generated code as reference objects, so every address of
+    * one shape plans to the same code (measured: 0 Janino compiles per
+    * read after warm-up, ReadPlanSpec). Dimensions the layout prunes on
+    * keep a plain `In`/`EqualTo` over the selected leaves as well, so the
+    * scan still prunes partitions, files and buckets.
+    */
+  private[graft] def selectedFacts(sels: Seq[(Int, Seq[Int])]): (DataFrame, List[Column]) = {
+    import graft.functions.RefLookup
+    val (facts0, prune) = stateLock.synchronized {
+      (facts, Option(layoutDims.get(base)).getOrElse(Set.empty[Int]))
+    }
+    var df = facts0
+    var weightCols = List.empty[Column]
+    sels.foreach { case (i, sel) =>
+      val d = dimAt(i)
+      val di = col(s"d$i")
+      // key table entries (leaf → (selected member, weight)), or None when
+      // the dimension needs no predicate
+      val entries: Option[Iterable[(Int, Seq[(Int, Double)])]] =
+        if (d.isDegenerate) {
+          require(!(sel.contains(Dimension.DegenerateAllId) ||
+              sel.contains(Dimension.DegenerateLeafAllId)) || sel.size == 1,
+            s"degenerate dimension '${d.name}': the all-member / leaf-all " +
+              "sentinels cannot be mixed with raw keys in one grid selection")
+          if (sel == Seq(Dimension.DegenerateAllId)) {
+            df = df.withColumn(s"a$i", RefLookup.constant(Dimension.DegenerateAllId)); None
+          } else if (sel == Seq(Dimension.DegenerateLeafAllId)) {
+            df = df.withColumn(s"a$i", di); None
+          } else Some(sel.distinct.map(k => k -> Seq(k -> 1.0)))
+        } else if (sel.size == 1 && d.coversAllLeavesUnit(sel.head)) {
+          // identity rollup (full coverage at unit weight — the top `All`):
+          // every row matches once at weight 1. Contract: facts addressing
+          // members REMOVED from the catalog are undefined until
+          // purgeUnknownMembers() (ARCHITECTURE §1).
+          df = df.withColumn(s"a$i", RefLookup.constant(sel.head)); None
+        } else if (sel.forall(d.levelOf(_) == 0) && {
+            val leaves = d.leafMembers
+            sel.size == leaves.size && sel.toSet == leaves.iterator.map(_.id).toSet }) {
+          // every leaf: a no-op predicate (full-resolution grids such as
+          // summary builds stay pure scans)
+          df = df.withColumn(s"a$i", di); None
+        } else Some(sel.distinct.flatMap(anc => d.closureOf(anc).map(r => (r.leaf, anc, r.weight)))
+          .groupBy(_._1).map { case (leaf, rs) => leaf -> rs.map(r => r._2 -> r._3) })
+      entries.foreach { byLeaf =>
+        if (prune(i)) {
+          val leaves = byLeaf.map(_._1).toSeq
+          df = df.filter(if (leaves.size == 1) di === leaves.head else di.isin(leaves: _*))
+        }
+        df = RefLookup.attach(df, Seq(di), Cube.closureEntry,
+          byLeaf.map { case (leaf, aws) => Array(leaf) -> aws.map { case (a, w) => InternalRow(a, w) } },
+          s"__c$i")
+          .withColumn(s"a$i", col(s"__c$i.a"))
+        // leaf-only selections carry no weight (a leaf's self-row is 1.0)
+        if (!unitWeightDim(i) && sel.exists(d.levelOf(_) > 0))
+          weightCols ::= weightOf(col(s"__c$i.w"))
+      }
+    }
+    (df, weightCols)
   }
 
   // ---- batched grid aggregation (views / query dialect) -------------------
@@ -1056,63 +1146,16 @@ final class Cube(
     * `(a0:Int, …, aN-1:Int, value)` where `a_i` is the requested member id.
     *
     * This replaces the reference's per-cell loop (`query.py:101-136`,
-    * `view.py:769-911`) with a single Catalyst-planned job: per dimension one
-    * broadcast join against the closure subset (fan-out = matching ancestors),
-    * then one hash aggregation. At scale this shuffles once, on the grid keys.
+    * `view.py:769-911`) with a single Catalyst-planned job: the closure
+    * subsets enter as lookup expressions ([[selectedFacts]]; fan-out =
+    * matching ancestors), then one hash aggregation. At scale this shuffles
+    * once, on the grid keys.
     */
   def gridAggregate(selections: Seq[Seq[Int]], valueExpr: Column => Column = identity): DataFrame = {
     require(selections.length == nDims)
-    var df = facts
-    var weightCols = List.empty[Column]
-    val outCols = mutable.ArrayBuffer[Column]()
-    selections.zipWithIndex.foreach { case (sel, i) =>
-      if (dimensions(i).isDegenerate) {
-        // raw keys: pushed-down filter, group key = the fact column itself.
-        // The "all" member: no filter, constant group key — never a closure.
-        // The leaf-all sentinel: no filter, FULL resolution (the summary-
-        // build shape — the key space cannot be enumerated driver-side).
-        require(!(sel.contains(Dimension.DegenerateAllId) ||
-            sel.contains(Dimension.DegenerateLeafAllId)) || sel.size == 1,
-          s"degenerate dimension '${dimensions(i).name}': the all-member / " +
-            "leaf-all sentinels cannot be mixed with raw keys in one grid selection")
-        if (sel == Seq(Dimension.DegenerateAllId)) {
-          df = df.withColumn(s"a$i", lit(Dimension.DegenerateAllId))
-        } else if (sel == Seq(Dimension.DegenerateLeafAllId)) {
-          df = df.withColumn(s"a$i", col(s"d$i"))
-        } else {
-          df = if (sel.size == 1) df.filter(col(s"d$i") === sel.head)
-               else df.filter(col(s"d$i").isin(sel: _*))
-          df = df.withColumn(s"a$i", col(s"d$i"))
-        }
-        outCols += col(s"a$i")
-      } else {
-        val allLeaf = sel.forall(dimensions(i).levelOf(_) == 0)
-        if (allLeaf) {
-          // a selection of EVERY leaf is a no-op predicate — skip it (facts
-          // carry only leaf ids; stale ids of removed members are undefined
-          // until purgeUnknownMembers, with or without the filter). Keeps
-          // full-resolution grids — e.g. aggregate-summary builds — pure
-          // scans instead of scans behind a catalog-sized IN list.
-          val leaves = dimensions(i).leafMembers
-          val isAllLeaves = sel.size == leaves.size && sel.toSet == leaves.map(_.id).toSet
-          df = if (isAllLeaves) df
-               else if (sel.size == 1) df.filter(col(s"d$i") === sel.head)
-               else df.filter(col(s"d$i").isin(sel: _*))
-          df = df.withColumn(s"a$i", col(s"d$i"))
-        } else if (sel.size == 1 && dimensions(i).coversAllLeavesUnit(sel.head)) {
-          // identity rollup (see Cube.rollup): constant grid key, no join
-          df = df.withColumn(s"a$i", lit(sel.head))
-        } else {
-          val cl = closureDf(i).filter(col("anc").isin(sel: _*))
-            .select(col("anc").as(s"a$i"), col("leaf").as(s"leaf_$i"), weightExpr.as(s"w_$i"))
-          df = df.join(broadcast(cl), col(s"d$i") === col(s"leaf_$i"))
-          if (needsWeight(i)) weightCols ::= col(s"w_$i")
-        }
-        outCols += col(s"a$i")
-      }
-    }
+    val (df, weightCols) = selectedFacts(selections.zipWithIndex.map(_.swap))
     val weighted = weightCols.foldLeft(valueExpr(col("value")))(_ * _)
-    df.groupBy(outCols.toSeq: _*).agg(sum(weighted).as("value"))
+    df.groupBy(dimCols.indices.map(i => col(s"a$i")): _*).agg(sum(weighted).as("value"))
   }
 
   /** Leaf-level ids under the given members (no weights — membership only). */
@@ -1127,9 +1170,7 @@ final class Cube(
         s"dimension '${d.name}' is degenerate — 'All' cannot be enumerated; " +
           "list raw keys explicitly (areas/enumeration need concrete members)")
       memberIds.distinct
-    } else memberIds.flatMap { id =>
-      if (d.levelOf(id) == 0) Seq(id) else d.closureRows.collect { case r if r.anc == id => r.leaf }
-    }.distinct
+    } else memberIds.flatMap(id => d.closureOf(id).map(_.leaf)).distinct
   }
 
   def area(pattern: (String, Seq[String])*): Area = Area(this, pattern)
@@ -1204,6 +1245,12 @@ final class Cube(
 }
 
 object Cube {
+  /** One closure-lookup entry: the selected member and the summed path
+    * weight of the leaf under it. */
+  private val closureEntry = StructType(Seq(
+    StructField("a", IntegerType, nullable = false),
+    StructField("w", DoubleType, nullable = false)))
+
   /** Immutable mutation-log state handle (see [[History]]). */
   final case class State(
       base: DataFrame,

@@ -350,6 +350,7 @@ final class Dimension(val name: String) {
     closure = buildClosure(levels)
     // eager: publish the memo with the new closure so concurrent readers
     // never observe a stale identity set after a dimension edit
+    closureIdx = computeClosureIndex()
     identityCovers = computeIdentityCovers()
     allParentsMap = buildAllParents()
     // members REMOVED by this edit: ids committed before the edit whose slot
@@ -565,14 +566,30 @@ final class Dimension(val name: String) {
   @volatile private var identityCovers: Set[Int] = null
   private def computeIdentityCovers(): Set[Int] = {
     val nLeaves = leafMembers.size
-    closure.groupBy(_.anc).collect {
+    closureIndex.collect {
       case (anc, rows) if rows.size == nLeaves && rows.forall(_.weight == 1.0) => anc
     }.toSet
   }
-  /** Leaf descendants of one member, with effective weights. */
-  def leavesOf(member: String): Vector[ClosureRow] = {
-    val id = idOf(member); closure.filter(_.anc == id)
+
+  /** The closure grouped per ancestor (anc → its leaf rows in leaf order),
+    * memoized per commit like [[coversAllLeavesUnit]]'s set: read plans
+    * build their closure lookups from it ([[Cube.selectedFacts]]), and
+    * [[leavesOf]] / [[Cube.leafIdsOf]] answer from it instead of scanning
+    * the whole closure per member.
+    */
+  private def closureIndex: Map[Int, Vector[ClosureRow]] = {
+    if (closureIdx == null) closureIdx = computeClosureIndex()
+    closureIdx
   }
+  @volatile private var closureIdx: Map[Int, Vector[ClosureRow]] = null
+  private def computeClosureIndex(): Map[Int, Vector[ClosureRow]] = closure.groupBy(_.anc)
+
+  /** Closure rows of one member id (a leaf has its self-row; an unknown id
+    * has none). */
+  def closureOf(id: Int): Vector[ClosureRow] = closureIndex.getOrElse(id, Vector.empty)
+
+  /** Leaf descendants of one member, with effective weights. */
+  def leavesOf(member: String): Vector[ClosureRow] = closureOf(idOf(member))
   def allParents(id: Int): Set[Int] = allParentsMap.getOrElse(id, Set.empty)
 
   // ---- attributes / aliases / subsets / formats ---------------------------
@@ -700,7 +717,7 @@ final class Member(val dimension: Dimension, val id: Int) {
   def parentWeight(parentName: String): Double =
     d.parentWeights.getOrElse(dimension.idOf(parentName), 1.0)
   def leaves: Seq[Member] =
-    dimension.closureRows.filter(r => r.anc == id && r.leaf != id).map(r => new Member(dimension, r.leaf))
+    dimension.closureOf(id).filter(_.leaf != id).map(r => new Member(dimension, r.leaf))
   def roots: Seq[Member] = dimension.rootMembers.map(m => new Member(dimension, m.id))
   def allParents: Seq[Member] = dimension.allParents(id).toSeq.sorted.map(new Member(dimension, _))
   override def toString: String = s"${dimension.name}:$name"

@@ -1,7 +1,7 @@
 package graft.olap
 
 import graft.core.{Cube, Database, Dimension}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   *
   * Execution deviates from the reference by design (SURVEY §3.2): instead of
   * a per-address `cube[...]` loop over the cartesian product, the whole grid
-  * is ONE Catalyst job (closure joins + hash aggregation); only non-empty
+  * is ONE Catalyst job (closure lookups + hash aggregation); only non-empty
   * cells are returned.
   */
 final class OlapQuery(db: Database, sql: String,
@@ -124,6 +124,19 @@ final class OlapQuery(db: Database, sql: String,
     */
   def execute(): DataFrame = executeOn(cube, selections)
 
+  /** `df` plus string column `name` looked up from grid key `a<i>`; rows
+    * whose key has no entry drop out. */
+  private def labelled(df: DataFrame, i: Int, name: String,
+      byId: Seq[(Int, String)]): DataFrame = {
+    val entry = StructType(Seq(StructField("s", StringType)))
+    graft.functions.RefLookup.attach(df, Seq(col(s"a$i")), entry,
+      byId.map { case (id, s) => Array(id) -> Seq(
+        org.apache.spark.sql.catalyst.InternalRow(
+          if (s == null) null else org.apache.spark.unsafe.types.UTF8String.fromString(s))) },
+      s"__l$i")
+      .withColumn(name, col(s"__l$i.s")).drop(s"__l$i")
+  }
+
   /** The same grid + projection against a ROUTED target (an aggregate
     * summary whose derived dimensions carry the same member names) — used
     * by [[OlapQuery.routed]]; `sels` are the target cube's member ids. */
@@ -143,21 +156,14 @@ final class OlapQuery(db: Database, sql: String,
           // an inner name join would silently drop every row)
           df = df.withColumn(d.name, d.functionalNameColumn(col(s"a$i")))
         } else {
-          val names = target.memberNamesDf(i)
-            .select(col("id").as(s"__id$i"), col("mname").as(d.name))
-          df = df.join(broadcast(names), col(s"a$i") === col(s"__id$i")).drop(s"__id$i")
+          // member names by a lookup on the grid key (inner semantics: a
+          // key outside the catalog drops its row)
+          df = labelled(df, i, d.name, d.members.map(m => m.id -> m.name))
         }
         if (wantDim) projected += col(d.name)
         attrFields.foreach { f =>
-          val attrName = f.substring(d.name.length + 1)
-          val field = d.attribute(attrName)
-          val spark = target.spark
-          val rows = d.members.map(m => Row(m.id, field.get(m.id).orNull))
-          val attrDf = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows.toList, 1),
-            StructType(Seq(StructField(s"__aid$i", IntegerType),
-              StructField(f, StringType))))
-          df = df.join(broadcast(attrDf), col(s"a$i") === col(s"__aid$i")).drop(s"__aid$i")
+          val field = d.attribute(f.substring(d.name.length + 1))
+          df = labelled(df, i, f, d.members.map(m => m.id -> field.get(m.id).orNull))
           projected += col(s"`$f`") // backticks: 'dim.attr' is a plain name, not a struct path
         }
       }

@@ -956,7 +956,7 @@ object Rules {
 
   /** BASE_LEVEL rule over a GRID of aggregated addresses in ONE job: pivot
     * the measure dimension at base grain, compute the rule column per base
-    * address, then aggregate over the remaining dimensions via closure joins
+    * address, then aggregate over the remaining dimensions via closure lookups
     * (≙ feeder remap + per-row rule calls, `cube.py:416-497` — expressed as
     * one declarative plan; calc-then-aggregate order is preserved, so
     * nonlinear exprs stay correct). `selections(measureDim)` is ignored.
@@ -967,49 +967,12 @@ object Rules {
   def baseRuleGrid(cube: Cube, rule: RuleDef, selections: Seq[Seq[Int]],
       measureDim: Int): org.apache.spark.sql.DataFrame = {
     val otherDims = (0 until cube.nDims).filterNot(_ == measureDim)
-    var df = cube.facts
-    var weightCols = List.empty[Column]
-    otherDims.foreach { i =>
-      val sel = selections(i)
-      if (cube.dimensions(i).isDegenerate) {
-        // mirror gridAggregate: raw keys = pushed-down filter with a<i>=d<i>;
-        // the All member = no filter + constant key; NEVER a closure join
-        require(!sel.contains(Dimension.DegenerateAllId) || sel.size == 1,
-          s"degenerate dimension '${cube.dimensions(i).name}': the all-member " +
-            "cannot be mixed with raw keys in one grid selection")
-        df = if (sel == Seq(Dimension.DegenerateAllId)) {
-          df.withColumn(s"a$i", lit(Dimension.DegenerateAllId))
-        } else {
-          (if (sel.size == 1) df.filter(col(s"d$i") === sel.head)
-           else df.filter(col(s"d$i").isin(sel: _*)))
-            .withColumn(s"a$i", col(s"d$i"))
-        }
-      } else {
-      val allLeaf = sel.forall(cube.dimensions(i).levelOf(_) == 0)
-      if (allLeaf) {
-        // a selection of EVERY leaf is a no-op predicate — skip it, exactly
-        // like gridAggregate (same caveat: stale ids of removed members are
-        // undefined until purgeUnknownMembers, with or without the filter)
-        val leaves = cube.dimensions(i).leafMembers
-        val isAllLeaves = sel.size == leaves.size && sel.toSet == leaves.map(_.id).toSet
-        df = (if (isAllLeaves) df
-              else if (sel.size == 1) df.filter(col(s"d$i") === sel.head)
-              else df.filter(col(s"d$i").isin(sel: _*)))
-          .withColumn(s"a$i", col(s"d$i"))
-      } else if (sel.size == 1 && cube.dimensions(i).coversAllLeavesUnit(sel.head)) {
-        // identity rollup (see Cube.rollup): constant grid key, no join
-        df = df.withColumn(s"a$i", lit(sel.head))
-      } else {
-        val cl = cube.closureDf(i).filter(col("anc").isin(sel: _*))
-          .select(col("anc").as(s"a$i"), col("leaf").as(s"leaf_$i"), cube.weightExpr.as(s"w_$i"))
-        df = df.join(broadcast(cl), col(s"d$i") === col(s"leaf_$i"))
-        if (cube.needsWeight(i)) weightCols ::= col(s"w_$i")
-      }
-      }
-    }
+    // the same selection step as gridAggregate: closure subsets as lookup
+    // expressions, grid keys a<i>, weight factors per aggregated dimension
+    val (selected, weightCols) = cube.selectedFacts(otherDims.map(i => i -> selections(i)))
     val neededMeasures = collectRefs(rule.expr).filterNot(_.contains(":"))
       .map(cube.dimensions(measureDim).idOf).distinct
-    df = df.filter(col(s"d$measureDim").isin(neededMeasures: _*))
+    val df = selected.filter(col(s"d$measureDim").isin(neededMeasures: _*))
     // pivot at BASE grain (base address + grid keys + weight factors)
     val baseKeys = otherDims.map(i => col(s"d$i")) ++ otherDims.map(i => col(s"a$i")) ++
       weightCols.zipWithIndex.map { case (c, j) => c.as(s"wj_$j") }

@@ -161,18 +161,21 @@ final class View(val cube: Cube, val dfn: ViewDef) {
 
     var df = cube.gridAggregate(sel.toIndexedSeq)
 
-    // row member names + position ordinals (axis order, not alphabetical)
+    // row member names + position ordinals (axis order, not alphabetical),
+    // attached by a lookup on the grid key — a member listed twice yields
+    // its row twice, as the row axis asks
+    val rowLabel = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("name", org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("ord", org.apache.spark.sql.types.IntegerType)))
     rowDims.zip(dfn.rows.entries).foreach { case (i, (dName, members)) =>
-      val spark = cube.spark
-      val rows = members.zipWithIndex.map { case (m, ord) =>
-        org.apache.spark.sql.Row(cube.dimensions(i).idOf(m), m, ord)
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(s"__id$i", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField(dName, org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(s"__ord$i", org.apache.spark.sql.types.IntegerType)))
-      val names = spark.createDataFrame(spark.sparkContext.parallelize(rows.toList, 1), schema)
-      df = df.join(broadcast(names), col(s"a$i") === col(s"__id$i")).drop(s"__id$i")
+      val labels = members.zipWithIndex.groupBy(m => cube.dimensions(i).idOf(m._1))
+        .map { case (id, ms) => Array(id) -> ms.sortBy(_._2).map { case (m, ord) =>
+          org.apache.spark.sql.catalyst.InternalRow(
+            org.apache.spark.unsafe.types.UTF8String.fromString(m), ord) } }
+      df = graft.functions.RefLookup.attach(df, Seq(col(s"a$i")), rowLabel, labels, s"__rl$i")
+        .withColumn(dName, col(s"__rl$i.name"))
+        .withColumn(s"__ord$i", col(s"__rl$i.ord"))
+        .drop(s"__rl$i")
     }
 
     // pivot on the composite position key: per column dim an id→name map,

@@ -4,7 +4,7 @@ import graft.core.{Cube, Database}
 import graft.olap.{OlapQuery, View, ViewDef, ViewWindow}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.util.concurrent.locks.ReentrantReadWriteLock
-import org.apache.spark.sql.functions.{broadcast, col, sum}
+import org.apache.spark.sql.functions.{col, sum}
 import org.json4s._
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
@@ -27,8 +27,9 @@ import org.json4s.jackson.JsonMethods
   *    model declares)
   *  - `PUT  /cells/{db}/{cube}` body `{"address":[…],"value":v}` — write
   *  - `POST /cells/{db}/{cube}/batch` body `{"addresses":[[…],…]}` —
-  *    batched reads: ONE Spark job resolves every base-cell address
-  *    (per-cell HTTP loops can never amortize the per-request floor)
+  *    batched reads: ONE Spark job resolves every distinct base-cell
+  *    address (per-cell HTTP loops can never amortize the per-request
+  *    floor); a repeated address reads its value at every listing
   *  - `POST /views/{db}/{cube}?format=json|html|csv[&top..right]` —
   *    render an ad-hoc [[ViewDef]] (JSON body, the persisted-view codec)
   *  - `GET  /views/{db}/{cube}/{name}?format=…` — render a NAMED view
@@ -216,12 +217,13 @@ final class RestServer(databases: Seq[Database], port: Int = 0) {
 
     server.createContext("/cells", (ex: HttpExchange) => handle(ex) {
       segments(ex) match {
-        // batched reads: ONE Spark job resolves every base-cell address
-        // (broadcast the address list against the merged facts, one
-        // per-address aggregation) — a per-cell HTTP loop can never
-        // amortize the per-request floor, so the engine-native shape
-        // (Cube.readBatch's join) gets its own route. Addresses naming
-        // AGGREGATED members fall back to per-address rollup gets.
+        // batched reads: ONE Spark job resolves every distinct base-cell
+        // address (the address set probes the merged facts as a lookup
+        // expression, one per-address aggregation) — a per-cell HTTP loop
+        // can never amortize the per-request floor, so the engine-native
+        // shape gets its own route. Addresses naming AGGREGATED members
+        // fall back to per-address rollup gets. A repeated address is
+        // resolved once and its value returned at every listing.
         case Seq("cells", dbName, cubeName, "batch")
             if ex.getRequestMethod == "POST" =>
           implicit val fmts: Formats = DefaultFormats
@@ -235,32 +237,25 @@ final class RestServer(databases: Seq[Database], port: Int = 0) {
             s"address $a must name all ${c.nDims} dimensions"))
           val values: Seq[Option[Double]] = withRead(d) {
             val bolts = addrs.map(a => a.zipWithIndex.map { case (m, i) =>
-              c.dimensions(i).idOf(m) })
+              c.dimensions(i).idOf(m) }.toVector)
+            val distinct = bolts.zip(addrs).distinctBy(_._1)
             val isBase = (b: Seq[Int]) => b.zipWithIndex.forall { case (id, i) =>
               c.dimensions(i).isDegenerate || c.dimensions(i).levelOf(id) == 0 }
-            val (baseIdx, aggIdx) = bolts.zipWithIndex.partition(x => isBase(x._1))
-            val resolved = new Array[Option[Double]](bolts.size)
-            if (baseIdx.nonEmpty) {
-              val s = c.spark
-              val addrDf = s.createDataFrame(
-                s.sparkContext.parallelize(
-                  baseIdx.map(x => org.apache.spark.sql.Row.fromSeq(x._1)), 1),
-                org.apache.spark.sql.types.StructType(c.dimCols.map(n =>
-                  org.apache.spark.sql.types.StructField(n,
-                    org.apache.spark.sql.types.IntegerType))))
-              val got = c.facts
-                .join(broadcast(addrDf), c.dimCols, "inner")
+            val (base, agg) = distinct.partition(x => isBase(x._1))
+            val got: Map[Vector[Int], Option[Double]] =
+              (if (base.isEmpty) Map.empty[Vector[Int], Double]
+               else c.facts
+                .filter(graft.functions.RefLookup.contains(c.dimCols.map(col),
+                  base.map(_._1.toArray)).isNotNull)
                 .groupBy(c.dimCols.map(col): _*)
                 .agg(sum(col("value")).cast("double").as("__v"))
                 .collect()
                 .map(r => Vector.tabulate(c.nDims)(r.getInt) -> r.getDouble(c.nDims))
-                .toMap
-              // `facts` merges the overlay (point writes and deletes) into
-              // the frame, so the single job is already write-correct
-              baseIdx.foreach { case (b, i) => resolved(i) = got.get(b.toVector) }
-            }
-            aggIdx.foreach { case (_, i) => resolved(i) = c.get(addrs(i)) }
-            resolved.toSeq
+                .toMap).map { case (k, v) => k -> Some(v) } ++
+              agg.map { case (b, a) => b -> c.get(a) }
+            // `facts` merges the overlay (point writes and deletes) into
+            // the frame, so the single job is already write-correct
+            bolts.map(b => got.getOrElse(b, None))
           }
           json(ex, 200, "cells" -> addrs.zip(values).map { case (a, v) =>
             ("address" -> a) ~

@@ -49,15 +49,17 @@ class HugeModelSpec extends AnyFunSuite {
     }
   }
 
-  test("identity rollups skip the closure join; partial/weighted covers keep it") {
+  test("identity rollups skip the closure lookup; partial/weighted covers keep it") {
     val cube = HugeModel.get(spark)
     // All^8: every dimension's All covers every leaf at weight 1 — the plan
-    // must be a bare scan + aggregate, zero joins
+    // must be a bare scan + aggregate: no join, no closure probe, no filter
     val allIds = cube.dimensions.map(d => Seq(d.idOf("All")))
     val plan = cube.gridAggregate(allIds).queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), s"top-cell grid should have no joins:\n$plan")
+    assert(!plan.contains("Join") && !plan.contains("Filter"),
+      s"top-cell grid should be a bare scan-aggregate:\n$plan")
     // weighted cover (tiny model Profit = Sales − Cost) keeps its closure
-    // join — it is neither full-coverage nor unit-weight
+    // lookup on the measures column — it is neither full-coverage nor
+    // unit-weight
     val db = TinyModel.build(spark)
     val tc = db.cube("sales")
     def mid(d: String, m: String) = db.dimension(d).idOf(m)
@@ -65,7 +67,8 @@ class HugeModelSpec extends AnyFunSuite {
       Seq(mid("years", "2021")), Seq(mid("months", "Year")),
       Seq(mid("regions", "Total")), Seq(mid("products", "Total")),
       Seq(mid("measures", "Profit"))))
-    assert(g.queryExecution.executedPlan.toString.contains("Join"),
-      "weighted rollup must keep its closure join")
+    val gPlan = g.queryExecution.executedPlan.toString
+    assert(gPlan.contains("graft_ref_lookup(d4") && !gPlan.contains("Join"),
+      s"weighted rollup must keep its closure lookup:\n$gPlan")
   }
 }

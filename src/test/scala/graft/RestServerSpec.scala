@@ -120,6 +120,23 @@ class RestServerSpec extends AnyFunSuite {
       .statusCode() == 400)
   }
 
+  test("batched cell reads: a repeated address reads its value at every listing") {
+    db.cube("sales").set(Seq("2023", "Jul", "South", "van", "Cost"), 47.0)
+    val cell = """["2023","Jul","South","van","Cost"]"""
+    val rollup = """["2023","Q3","South","van","Cost"]"""
+    val r = post("/cells/tiny/sales/batch",
+      s"""{"addresses":[$cell,$rollup,$cell,$cell,$rollup]}""")
+    assert(r.statusCode() == 200, r.body())
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    val cells = (org.json4s.jackson.JsonMethods.parse(r.body()) \ "cells")
+      .extract[List[org.json4s.JValue]]
+    val q3 = db.cube("sales").get(Seq("2023", "Q3", "South", "van", "Cost"))
+    assert(q3.exists(_ >= 47.0))
+    assert(cells.map(c => (c \ "value").extractOpt[Double]) ==
+      List(Some(47.0), q3, Some(47.0), Some(47.0), q3),
+      "each listing reads the cell once, not once per repetition")
+  }
+
   test("dialect query route returns rows as JSON records") {
     val sql = "SELECT * FROM sales WHERE '2021', 'Jan', North, 'motorcycles', 'Sales'"
     val r = post("/query/tiny", sql)
