@@ -196,9 +196,9 @@ object Bench {
     )
   }
 
-  /** The bench SparkSession config — the diagnostic tools (TimeOne,
-    * WarmBuild) build theirs HERE so a measurement can never silently run
-    * under a different configuration than the bench it isolates.
+  /** The bench SparkSession config — `graft.Profile` (test scope) builds
+    * its session HERE so a profile can never silently run under a
+    * different configuration than the bench it isolates.
     */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -211,24 +211,53 @@ object Bench {
       // splits tried in round 2 flooded local[32] with tasks and regressed
       // the scan/join queries up to 6.9× — task scheduling overhead exceeds
       // what the extra map-side parallelism buys on these plans. The Spark
-      // default (128 MB) wins; env-overridable for re-measurement.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "128m"))
+      // default (128 MB) wins; pinned here.
+      .config("spark.sql.files.maxPartitionBytes", "128m")
       .config("spark.sql.session.timeZone", "UTC")
       // bucketed-table sink (saveAsTable) must land in a scratch dir, never
       // the working directory's spark-warehouse
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graftbenchwh").toString)
       .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_OFFHEAP=8g enables Tungsten off-heap memory — the 1e8 GC
-    // experiment lever (r16 verdict #5); unset = default on-heap
-    val withOffHeap = sys.env.get("SPARK_GRAFT_OFFHEAP").fold(spark)(sz =>
-      spark.config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size", sz))
-    val built = withOffHeap.getOrCreate()
-    built.sparkContext.setLogLevel("ERROR")
-    built
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
   }
+
+  // Watchdog and 1e8-block settings. Each was an env knob once; the
+  // measured defaults are constants now (the levers live in git history).
+  // Their rationale is at the use sites in [[main]].
+  /** Idle settle before the canary floors are calibrated. */
+  private val SettleMs = 8000L
+  /** Preflight idle-gate attempts (15 s backoff each). */
+  private val PreflightTries = 6
+  /** Steal share (%) above which the preflight waits and a pass is dirty. */
+  private val StealDirtyPct = 2.0
+  /** Full-core steal probe window. */
+  private val StealProbeSec = 15.0
+  /** Longest the preflight steal gate waits before proceeding anyway. */
+  private val StealGateMaxSec = 600L
+  /** Re-runs allowed for passes whose canary brackets read dirty. */
+  private val PassRetries = 2
+  /** Dirty-pass thresholds as multiples of the spin / mem / io floors:
+    * mem/io are looser than spin (their idle variance is larger), and io
+    * is the loosest — page-cache state makes a single fsync the noisiest
+    * probe. */
+  private val PassDirtyK = 1.75
+  private val MemDirtyK = 2.0
+  private val IoDirtyK = 4.0
+  /** A row trips when it exceeds its phase-adjusted clean minimum by this
+    * ratio AND by [[TripwireSlackSec]]. */
+  private val TripwireK = 1.25
+  private val TripwireSlackSec = 0.1
+  /** In-run re-measurement budget for tripped rows. */
+  private val TripwireRetries = 8
+  /** Fact rows (and docs) of the guarded 1e8 block. */
+  private[graft] val Huge8Rows = 100000000L
+  /** Output files of the 1e8 z-store build's range exchange. */
+  private[graft] val Huge8ZFiles = 64
+  /** Range slices / shuffle partitions of the 1e8 MinHash rows. */
+  private[graft] val Huge8MinhashParts = 256
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -396,15 +425,13 @@ object Bench {
     // canaries and therefore the FLOOR itself, letting the preflight pass
     // against a poisoned baseline (the documented self-calibration blind
     // spot; likely what let r7's 17.5 s model_build through).
-    Thread.sleep(sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_MS", "8000").toLong)
+    Thread.sleep(SettleMs)
     // Untimed warm-up spins ×3: C2-compile the spin loop + warm thread
     // startup (the first canary otherwise reads ~1.5× its successors on an
     // idle host), and CALIBRATE the idle floor for this hardware — the min
     // observed median is the best available idle estimate (a hardcoded
     // floor false-positives on marginally slower hosts, r6 advice).
-    // SPARK_GRAFT_CANARY_FLOOR still overrides for cross-host pinning.
     val warm = (1 to 3).map(_ => spinCanary())
-    val envFloor = sys.env.get("SPARK_GRAFT_CANARY_FLOOR").map(_.toDouble)
     // Floor estimator = the SECOND-smallest observation (round 17): the
     // plain min let ONE anomalously fast sample (a 0.004 s mem canary on a
     // host whose steady idle reads 0.010) calibrate an unattainable floor
@@ -418,21 +445,18 @@ object Bench {
     }
     val obsMin = new Min2
     warm.foreach(w => obsMin.add(w._1))
-    def floor: Double = envFloor.getOrElse(obsMin.floor)
+    def floor: Double = obsMin.floor
     // mem/io floors: same min-observed self-calibration (same blind spot:
     // contention present from warm-up through the end poisons the floor —
-    // the preflight backoff is the mitigation), env-overridable for
-    // cross-host pinning
+    // the preflight backoff is the mitigation)
     val warmMem = (1 to 3).map(_ => memCanary())
     val warmIo = (1 to 3).map(_ => ioCanary())
-    val envMemFloor = sys.env.get("SPARK_GRAFT_MEM_FLOOR").map(_.toDouble)
-    val envIoFloor = sys.env.get("SPARK_GRAFT_IO_FLOOR").map(_.toDouble)
     val obsMemMin = new Min2
     val obsIoMin = new Min2
     warmMem.foreach(obsMemMin.add)
     warmIo.foreach(obsIoMin.add)
-    def memFloor: Double = envMemFloor.getOrElse(obsMemMin.floor)
-    def ioFloor: Double = envIoFloor.getOrElse(obsIoMin.floor)
+    def memFloor: Double = obsMemMin.floor
+    def ioFloor: Double = obsIoMin.floor
 
     // PRE-FLIGHT idle gate (r6 verdict: the official artifact ran ~20% hot
     // with contended:false — min-of-passes cannot protect against SUSTAINED
@@ -441,10 +465,9 @@ object Bench {
     // 1.25× the floor, waiting out residual host state with retry/backoff;
     // if it never settles, emit an EXPLICITLY INVALID artifact (value -1,
     // error marker) instead of plausible-but-poisoned numbers.
-    val preflightTries = sys.env.getOrElse("SPARK_GRAFT_PREFLIGHT_TRIES", "6").toInt
     var preflightOk = false
     var tries = 0
-    while (!preflightOk && tries < preflightTries) {
+    while (!preflightOk && tries < PreflightTries) {
       val (med, _) = spinCanary()
       val mem = memCanary()
       obsMin.add(med) // an observation can only lower the idle estimate
@@ -454,13 +477,13 @@ object Bench {
         tries += 1
         System.err.println(f"[graft.Bench] preflight: canary spin $med%.3fs " +
           f"(floor ${floor}%.3f) / mem $mem%.3fs (floor ${memFloor}%.3f) — " +
-          f"host not idle, backing off (try $tries/$preflightTries)")
+          f"host not idle, backing off (try $tries/$PreflightTries)")
         Thread.sleep(15000)
       }
     }
     if (!preflightOk) {
       System.err.println("[graft.Bench] REFUSING to bench: host never settled " +
-        s"within $preflightTries preflight retries; artifact below is marked invalid")
+        s"within $PreflightTries preflight retries; artifact below is marked invalid")
       println(f"""{"metric":"total","value":-1.0,"unit":"sec","queries":{},"sf":"$sfDir","error":"preflight_contended","canary_floor_sec":$floor%.3f,"contended":true}""")
       spark.stop()
       return
@@ -475,9 +498,6 @@ object Bench {
     // (bounded) and re-probe. If the window never opens, proceed anyway —
     // the per-pass brackets and per-row steal attribution carry the
     // evidence — but the artifact records the gate's verdict.
-    val stealDirtyPct = sys.env.getOrElse("SPARK_GRAFT_STEAL_DIRTY_PCT", "2.0").toDouble
-    val stealProbeSec = sys.env.getOrElse("SPARK_GRAFT_STEAL_PROBE_SEC", "15").toDouble
-    val stealGateMaxSec = sys.env.getOrElse("SPARK_GRAFT_STEAL_GATE_MAX_SEC", "600").toLong
     def probeSteal(sec: Double): Double = {
       val (c0, s0) = cpuStat()
       val end = System.nanoTime() + (sec * 1e9).toLong
@@ -488,17 +508,17 @@ object Bench {
       val (c1, s1) = cpuStat()
       if (c1 > c0) 100.0 * (s1 - s0) / (c1 - c0) else 0.0
     }
-    var preflightSteal = probeSteal(stealProbeSec)
+    var preflightSteal = probeSteal(StealProbeSec)
     var stealGateWaited = 0L
-    while (preflightSteal > stealDirtyPct && stealGateWaited < stealGateMaxSec) {
+    while (preflightSteal > StealDirtyPct && stealGateWaited < StealGateMaxSec) {
       System.err.println(f"[graft.Bench] preflight: hypervisor steal " +
-        f"$preflightSteal%.2f%% > $stealDirtyPct%.2f%% under full-core load — " +
-        f"delaying (waited ${stealGateWaited}s/${stealGateMaxSec}s)")
+        f"$preflightSteal%.2f%% > $StealDirtyPct%.2f%% under full-core load — " +
+        f"delaying (waited ${stealGateWaited}s/${StealGateMaxSec}s)")
       Thread.sleep(30000)
-      stealGateWaited += 30 + stealProbeSec.toLong
-      preflightSteal = probeSteal(stealProbeSec)
+      stealGateWaited += 30 + StealProbeSec.toLong
+      preflightSteal = probeSteal(StealProbeSec)
     }
-    if (preflightSteal > stealDirtyPct) System.err.println(
+    if (preflightSteal > StealDirtyPct) System.err.println(
       f"[graft.Bench] WARNING: steal window never closed " +
       f"($preflightSteal%.2f%% after ${stealGateWaited}s) — proceeding; " +
       "per-row steal attribution carries the evidence")
@@ -548,12 +568,10 @@ object Bench {
     // mid-run contention plateau — pass-2 canary 2.7× the floor — but only
     // WARNED; six rows shipped >2× inflated with no clean sample). Now each
     // pass is bracketed by canaries; a pass whose pre- OR post-canary median
-    // exceeds `dirtyK`× the floor is DIRTY and is re-run (bounded retries,
+    // exceeds `PassDirtyK`× the floor is DIRTY and is re-run (bounded retries,
     // min-of-passes merges the retry). Rows that never land in a clean pass
     // are published in `dirty_rows` and flip `contended` so the driver knows
     // to retry the artifact rather than trust plausible-but-poisoned numbers.
-    val passRetries = sys.env.getOrElse("SPARK_GRAFT_PASS_RETRIES", "2").toInt
-    val dirtyK = sys.env.getOrElse("SPARK_GRAFT_PASS_DIRTY_K", "1.75").toDouble
     // Clean-minima tripwire config, loaded BEFORE the passes (r14 verdict
     // #1): the minima both flag divergent rows in the artifact AND drive
     // the in-run RE-measurement of tripped multi-second rows below — a
@@ -579,12 +597,11 @@ object Bench {
     if (benchCpus != 32 && minimaLoaded.size > 0) System.err.println(
       s"[graft.Bench] tripwire disarmed: minima are 32-core-armed, this run " +
       s"has cpus=$benchCpus — per-row scaling is the driver's comparison to make")
-    val tripK = sys.env.getOrElse("SPARK_GRAFT_TRIPWIRE_K", "1.25").toDouble
     // absolute slack: sub-second rows jitter 40-80 ms between CLEAN runs
     // (JIT/GC/page cache) — a relative-only threshold flags 0.15 s rows at
     // 1.3x while the tripwire exists for the 2-4x build-row divergences;
-    // a row must exceed BOTH the ratio and this absolute delta to trip
-    val tripSlack = sys.env.getOrElse("SPARK_GRAFT_TRIPWIRE_SLACK", "0.1").toDouble
+    // a row must exceed BOTH the ratio and this absolute delta
+    // (TripwireSlackSec) to trip
     // the tripped ratio of a recorded row vs its HOST-PHASE-ADJUSTED clean
     // minimum (r15 verdict #2: minima from a fast host window flagged
     // 12-27 clean slow-phase rows at 1.3-1.7× — the comparison now scales
@@ -596,10 +613,10 @@ object Bench {
       results.get(name).filter(_ > 0).flatMap(v =>
         minima.rows.get(name).flatMap(row => BenchTripwire.trippedRatio(
           v, row, minima.defaultFloors, Some(floor), Some(memFloor),
-          tripK, tripSlack)))
-    // in-run re-measurement budget: ≤5 rows total, one retry each, only
+          TripwireK, TripwireSlackSec)))
+    // in-run re-measurement budget: TripwireRetries rows total, one retry each, only
     // rows ≥1 s (sub-second trips are jitter-class, the slack's domain)
-    var retryBudget = sys.env.getOrElse("SPARK_GRAFT_TRIPWIRE_RETRIES", "8").toInt
+    var retryBudget = TripwireRetries
     val tripwireRetried = scala.collection.mutable.ArrayBuffer[String]()
     var retriesUsed = 0
     var dirtyResidue = false
@@ -810,11 +827,6 @@ object Bench {
       recorded.toSet
     }
 
-    // the pass brackets sample all three channels; mem/io thresholds are
-    // looser than spin (their idle variance is larger), and io is the
-    // loosest — page-cache state makes a single fsync the noisiest probe
-    val memDirtyK = sys.env.getOrElse("SPARK_GRAFT_MEM_DIRTY_K", "2.0").toDouble
-    val ioDirtyK = sys.env.getOrElse("SPARK_GRAFT_IO_DIRTY_K", "4.0").toDouble
     // Hypervisor-steal bracket per pass (round 16): the r16 sign-off runs
     // measured 1.7-4.7% steal windows inflating rows 1.3-1.9× while EVERY
     // in-guest canary sat near its floor (spin phase 1.10) — steal is the
@@ -824,7 +836,6 @@ object Bench {
     // each pass is bracketed and a pass whose steal share exceeds the
     // threshold is DIRTY like a hot canary: re-run, min-merge, and rows
     // without a steal-quiet sample self-report in dirty_rows.
-    // (stealDirtyPct is hoisted above — the preflight steal gate shares it.)
     val passSteal = scala.collection.mutable.ArrayBuffer[Double]()
     def stealBracket[A](body: => A): (A, Double) = {
       val (c0, s0) = cpuStat()
@@ -855,18 +866,18 @@ object Bench {
       obsMin.add(post._1)
       obsMemMin.add(postMem)
       obsIoMin.add(postIo)
-      val dirty = pre._1 > dirtyK * floor || post._1 > dirtyK * floor ||
-        preMem > memDirtyK * memFloor || postMem > memDirtyK * memFloor ||
-        preIo > ioDirtyK * ioFloor || postIo > ioDirtyK * ioFloor ||
-        steal > stealDirtyPct
-      if (dirty && retriesUsed < passRetries) {
+      val dirty = pre._1 > PassDirtyK * floor || post._1 > PassDirtyK * floor ||
+        preMem > MemDirtyK * memFloor || postMem > MemDirtyK * memFloor ||
+        preIo > IoDirtyK * ioFloor || postIo > IoDirtyK * ioFloor ||
+        steal > StealDirtyPct
+      if (dirty && retriesUsed < PassRetries) {
         retriesUsed += 1
         System.err.println(f"[graft.Bench] pass $pass dirty: spin " +
-          f"(${pre._1}%.3f, ${post._1}%.3f) vs ${dirtyK}x${floor}%.3f, mem " +
-          f"($preMem%.3f, $postMem%.3f) vs ${memDirtyK}x${memFloor}%.3f, io " +
-          f"($preIo%.3f, $postIo%.3f) vs ${ioDirtyK}x${ioFloor}%.3f, steal " +
-          f"$steal%.2f%% vs $stealDirtyPct%.2f%% — " +
-          f"re-running pass (retry $retriesUsed/$passRetries)")
+          f"(${pre._1}%.3f, ${post._1}%.3f) vs ${PassDirtyK}x${floor}%.3f, mem " +
+          f"($preMem%.3f, $postMem%.3f) vs ${MemDirtyK}x${memFloor}%.3f, io " +
+          f"($preIo%.3f, $postIo%.3f) vs ${IoDirtyK}x${ioFloor}%.3f, steal " +
+          f"$steal%.2f%% vs $StealDirtyPct%.2f%% — " +
+          f"re-running pass (retry $retriesUsed/$PassRetries)")
         Thread.sleep(10000)
         // do not advance `pass`: min-of-passes merges the retry's numbers
       } else {
@@ -913,7 +924,7 @@ object Bench {
           retryCleanup.clear()
           val post = spinCanary(); canaries += post
           obsMin.add(post._1)
-          if (pre._1 <= dirtyK * floor && post._1 <= dirtyK * floor)
+          if (pre._1 <= PassDirtyK * floor && post._1 <= PassDirtyK * floor)
             cleanNames += n
           tripwireRetried += n
         }
@@ -976,13 +987,12 @@ object Bench {
     // scale evidence, MEASURED every round instead of remembered. Runs
     // ONCE after the passes so its multi-GB persisted footprint cannot
     // contaminate min-of-passes comparability, bracketed by its own
-    // canaries for the dirty verdict. SPARK_GRAFT_SKIP_1E8=1 skips;
-    // SPARK_GRAFT_HUGE8_ROWS scales (local iteration). The point-index
+    // canaries for the dirty verdict. SPARK_GRAFT_SKIP_1E8=1 skips it;
+    // its size is the Huge8Rows constant. The point-index
     // cap REFUSAL is asserted, not assumed: a 1e8-cell cube must decline
     // the driver-resident index rather than balloon the heap.
     val skip1e8 = sys.env.get("SPARK_GRAFT_SKIP_1E8").contains("1")
     if (!skip1e8 && only.forall(_.exists(_.startsWith("huge8")))) {
-      val rows8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_ROWS", "100000000").toLong
       // min-of-passes for the 1e8 rows too (r13 verdict #1: the official
       // huge8_build shipped 71.3 s against a 36.2 s clean sign-off — the
       // one-shot sample had no second chance). Each pass drops the memoized
@@ -993,24 +1003,24 @@ object Bench {
       val (cpu80, steal80) = cpuStat()
       for (_ <- 1 to passes8) {
         record("huge8_build",
-          try mtime("huge8_build") { graft.tpch.HugeModel.rebuild(spark, rows8); () }
+          try mtime("huge8_build") { graft.tpch.HugeModel.rebuild(spark, Huge8Rows); () }
           catch { case t: Throwable =>
             System.err.println(s"[graft.Bench] huge8_build failed: $t"); -1.0 })
         record("huge8_top", try {
-          val c = graft.tpch.HugeModel.at(spark, rows8)
+          val c = graft.tpch.HugeModel.at(spark, Huge8Rows)
           c.cacheEnabled = false; c.clearCache()
           var v = 0.0
           val t = mtime("huge8_top") {
             v = c.get(Seq.fill(graft.tpch.HugeModel.NDims)("All")).getOrElse(0.0)
           }
           c.cacheEnabled = true
-          require(math.round(v) == rows8,
-            s"huge8 self-verifying total broke: $v != $rows8")
+          require(math.round(v) == Huge8Rows,
+            s"huge8 self-verifying total broke: $v != $Huge8Rows")
           t
         } catch { case t: Throwable =>
           System.err.println(s"[graft.Bench] huge8_top failed: $t"); -1.0 })
         record("huge8_point_index_refusal", try {
-          val c = graft.tpch.HugeModel.at(spark, rows8)
+          val c = graft.tpch.HugeModel.at(spark, Huge8Rows)
           var refused = false
           val t = mtime("huge8_point_index_refusal") { refused = !c.enablePointIndex() }
           require(refused,
@@ -1022,9 +1032,9 @@ object Bench {
       // tripped 1e8 OLAP rows re-measure HERE, while the fixtures stand
       retryTripped(Seq("huge8_build", "huge8_top"), {
         case "huge8_build" =>
-          Some(() => { graft.tpch.HugeModel.rebuild(spark, rows8); () })
+          Some(() => { graft.tpch.HugeModel.rebuild(spark, Huge8Rows); () })
         case "huge8_top" => Some(() => {
-          val c = graft.tpch.HugeModel.at(spark, rows8)
+          val c = graft.tpch.HugeModel.at(spark, Huge8Rows)
           c.cacheEnabled = false; c.clearCache()
           try { c.get(Seq.fill(graft.tpch.HugeModel.NDims)("All")); () }
           finally c.cacheEnabled = true
@@ -1043,7 +1053,7 @@ object Bench {
       // range exchange allocates its sort buffers. Whatever still
       // diverges after this is environmental — and row_metrics now names
       // the cause (spill/peak-memory) in the artifact itself.
-      graft.tpch.HugeModel.drop(rows8, blocking = true)
+      graft.tpch.HugeModel.drop(Huge8Rows, blocking = true)
       graft.tpch.HugeModel.drop(graft.tpch.HugeModel.Rows, blocking = true)
       try spark.catalog.clearCache() catch { case _: Throwable => () }
       spark.sparkContext.getPersistentRDDs.values.foreach(r =>
@@ -1052,7 +1062,7 @@ object Bench {
       Thread.sleep(2000)
       // ---- pipeline-side 1e8 row (r13 verdict #6): incremental z-store
       // maintenance at scale, measured every round instead of via ad-hoc
-      // stress tools. The store build over rows8 synthetic facts is the
+      // stress tools. The store build over Huge8Rows synthetic facts is the
       // one-time fixture (timed once, like huge_build used to be priced);
       // the measured product row is the per-batch APPEND — its cost must
       // track the interleaving data (a z-confined batch re-clusters the
@@ -1066,21 +1076,19 @@ object Bench {
             pmod(hash(col("id") * 3), lit(1024)).cast("long").as("b"),
             (col("id") % 97).cast("double").as("value"))
         val zc = Seq(col("a"), col("b"))
-        // Shuffle width of the 1e8 range-exchange+sort: 64 output files ⇒
-        // ~50 MB in-flight sort runs per task at 32 threads — measured the
-        // fastest clean width, env-tunable because this row is the suite's
-        // most contention/spill-sensitive job (BENCH_r14's 3.44× trip) and
-        // re-measurement on a different host may prefer another width.
-        val zfiles = sys.env.getOrElse("SPARK_GRAFT_HUGE8_ZFILES", "64").toInt
+        // Shuffle width of the 1e8 range-exchange+sort (Huge8ZFiles): 64
+        // output files ⇒ ~50 MB in-flight sort runs per task at 32 threads
+        // — measured the fastest clean width for this row, the suite's most
+        // contention/spill-sensitive job (BENCH_r14's 3.44× trip).
         def zstoreBuild(dir: String): Unit = {
-          graft.pipeline.Layout.zorderWrite(spark, dir, zframe(rows8, 0),
-            zc, bits = 10, numFiles = zfiles)
+          graft.pipeline.Layout.zorderWrite(spark, dir, zframe(Huge8Rows, 0),
+            zc, bits = 10, numFiles = Huge8ZFiles)
           ()
         }
         results("huge8_pipe_zstore_build") = try mtime("huge8_pipe_zstore_build") { zstoreBuild(zdir) }
         catch { case t: Throwable =>
           System.err.println(s"[graft.Bench] huge8_pipe_zstore_build failed: $t"); -1.0 }
-        var off = rows8
+        var off = Huge8Rows
         if (results("huge8_pipe_zstore_build") >= 0) {
           // z-confined 1e5-row batches (keys < 32 → z in the lowest 1/1024
           // of the space), one append per pass — min-of-passes
@@ -1140,15 +1148,11 @@ object Bench {
         import org.apache.spark.sql.functions.{approx_count_distinct, array,
           col, concat, concat_ws, hash, lit, pmod, posexplode, slice, when,
           xxhash64}
-        val docs8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_DOCS",
-          rows8.toString).toLong
-        // 256 range slices bound per-task work (~400k docs each) — the
-        // partitions-sized-to-memory discipline a 1000-executor run of
-        // this operator applies
-        val minhashParts = sys.env.getOrElse(
-          "SPARK_GRAFT_HUGE8_MINHASH_PARTS", "256").toInt
+        // 256 range slices (Huge8MinhashParts) bound per-task work (~400k
+        // docs each) — the partitions-sized-to-memory discipline a
+        // 1000-executor run of this operator applies
         def minhashBody(): Unit = {
-          val docs = spark.range(0, docs8, 1, minhashParts)
+          val docs = spark.range(0, Huge8Rows, 1, Huge8MinhashParts)
             .select(col("id").as("doc"),
               concat_ws(" ", (0 until 8).map(j =>
                 concat(lit("w"), pmod(xxhash64(col("id"), lit(j)), lit(50000)))): _*)
@@ -1180,7 +1184,7 @@ object Bench {
         // ---- pipeline-side 1e8 row #3 (r16 verdict #4): the LSH candidate
         // JOIN + exact verify, end-to-end, with a CONTROLLED 1% duplicate
         // fraction — every doc whose id ends in 99 carries the text of
-        // id-1, so the operator must return EXACTLY docs8/100 verified
+        // id-1, so the operator must return EXACTLY Huge8Rows/100 verified
         // pairs (sim = 1.0) and the row self-verifies. This prices the
         // data-dependent stage huge8_pipe_minhash deliberately excludes:
         // the banded bucket self-join (now hot-bucket-capped), the
@@ -1193,8 +1197,6 @@ object Bench {
         // a 12.6 GB verify exchange, 125 s), at rows=8 it is ~10³. The
         // corpus-size-driven rows choice is the documented LSH scaling
         // contract (ARCHITECTURE §6e).
-        val pairDocs8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_PAIR_DOCS",
-          docs8.toString).toLong
         def minhashPairsBody(): Unit = {
           // partitions-sized-to-memory: the banded self-join shuffles 4
           // bands × docs rows per side — at the suite's 32 partitions each
@@ -1202,11 +1204,11 @@ object Bench {
           // dies in execution-memory acquisition (measured, r17 bring-up);
           // 256 gives ~25 MB sort runs, AQE coalesces the small stages
           val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-          spark.conf.set("spark.sql.shuffle.partitions", minhashParts.toString)
+          spark.conf.set("spark.sql.shuffle.partitions", Huge8MinhashParts.toString)
           try {
             val base = when(pmod(col("id"), lit(100)) === 99, col("id") - 1)
               .otherwise(col("id"))
-            val docs = spark.range(0, pairDocs8, 1, minhashParts)
+            val docs = spark.range(0, Huge8Rows, 1, Huge8MinhashParts)
               .select(col("id").as("doc"),
                 concat_ws(" ", (0 until 8).map(j =>
                   concat(lit("w"), pmod(xxhash64(base, lit(j)), lit(50000)))): _*)
@@ -1218,8 +1220,8 @@ object Bench {
             // 8-word sets only reach Jaccard ≥ 0.9 when identical, so the
             // planted pairs are the whole answer — any other count means the
             // candidate or verify stage broke
-            require(n == pairDocs8 / 100,
-              s"expected ${pairDocs8 / 100} planted duplicate pairs, got $n")
+            require(n == Huge8Rows / 100,
+              s"expected ${Huge8Rows / 100} planted duplicate pairs, got $n")
           } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
         }
         record("huge8_pipe_minhash_pairs",
@@ -1244,8 +1246,8 @@ object Bench {
         "huge8_pipe_minhash_pairs")
         .filter(results.contains)
       allNames ++= names8
-      if (pre8._1 <= dirtyK * floor && post8._1 <= dirtyK * floor &&
-          steal8 <= stealDirtyPct)
+      if (pre8._1 <= PassDirtyK * floor && post8._1 <= PassDirtyK * floor &&
+          steal8 <= StealDirtyPct)
         cleanNames ++= names8
     }
 
@@ -1296,7 +1298,7 @@ object Bench {
     // is compared against the best clean minimum recorded in
     // tools/bench_clean_minima.json (written from builder sign-off runs;
     // SPARK_GRAFT_BENCH_MINIMA overrides the path; loaded above, before
-    // the passes). Rows exceeding `tripK`× their clean minimum self-report
+    // the passes). Rows exceeding `TripwireK`× their clean minimum self-report
     // in the artifact's `tripwire` object and on stderr — and multi-second
     // rows were already RE-measured in-run (`tripwire_retried`), so a
     // surviving trip is persistent, not a transient spike. An absent/empty
@@ -1310,7 +1312,6 @@ object Bench {
     // "timing" is the semantics marker: per-query values are the MINIMUM
     // over `passes` warmed in-process passes (steady state), not one cold
     // pass — artifacts before round 4 were single-pass and not comparable
-    val floorSource = if (envFloor.isDefined) "env" else "derived_min_observed"
     val phasesJson = buildPhases.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val dirtyRowsJson = dirtyRows.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -1350,7 +1351,7 @@ object Bench {
     // `queries` serializes LAST (r16 verdict #2): the driver's tail capture
     // keeps the END of the line, and two rounds of artifacts shipped with
     // the per-row results dict truncated out of the front
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$benchCpus,"sf":"$sfDir","passes":$passes,"timing":"min_of_passes","model_build_phases":$phasesJson,"canary_spin_med_sec":$canaryMed,"canary_spin_max_sec":$canaryMax,"canary_threads":$nSpin,"canary_floor_sec":$floor%.3f,"canary_floor_source":"$floorSource","canary_mem_med_sec":$memJson,"mem_floor_sec":$memFloor%.3f,"canary_io_sec":$ioJson,"io_floor_sec":$ioFloor%.3f,"contended":$contended,"canary_ramp":$ramped,"pass_retries_used":$retriesUsed,"dirty_rows":$dirtyRowsJson,"steal_pct":$stealPct%.2f,"preflight_steal_pct":$preflightSteal%.2f,"steal_gate_wait_sec":$stealGateWaited,"tripwire":$tripJson,"tripwire_retried":$tripRetriedJson,"tripwire_threshold":$tripK%.2f,"tripwire_slack_sec":$tripSlack%.2f,"tripwire_rows_known":${minima.size},"tripwire_phase":$phaseJson,"pass_steal_pct":$passStealJson,"row_steal":$rowStealJson,"row_metrics":$rowMetricsJson,"queries":$qs}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$benchCpus,"sf":"$sfDir","passes":$passes,"timing":"min_of_passes","model_build_phases":$phasesJson,"canary_spin_med_sec":$canaryMed,"canary_spin_max_sec":$canaryMax,"canary_threads":$nSpin,"canary_floor_sec":$floor%.3f,"canary_floor_source":"derived_min_observed","canary_mem_med_sec":$memJson,"mem_floor_sec":$memFloor%.3f,"canary_io_sec":$ioJson,"io_floor_sec":$ioFloor%.3f,"contended":$contended,"canary_ramp":$ramped,"pass_retries_used":$retriesUsed,"dirty_rows":$dirtyRowsJson,"steal_pct":$stealPct%.2f,"preflight_steal_pct":$preflightSteal%.2f,"steal_gate_wait_sec":$stealGateWaited,"tripwire":$tripJson,"tripwire_retried":$tripRetriedJson,"tripwire_threshold":$TripwireK%.2f,"tripwire_slack_sec":$TripwireSlackSec%.2f,"tripwire_rows_known":${minima.size},"tripwire_phase":$phaseJson,"pass_steal_pct":$passStealJson,"row_steal":$rowStealJson,"row_metrics":$rowMetricsJson,"queries":$qs}""")
     // r18 verdict #1: ALL stderr warnings print BEFORE the final rows line.
     // sbt re-logs the program's stderr as "[error] ..." lines into the same
     // captured stream, and r18's TRIPWIRE warning (printed after the rows)
@@ -1360,7 +1361,7 @@ object Bench {
     // object lives in the long line above and in BENCH_FULL.
     val topTrip = tripped.headOption.map(_._2).getOrElse(0.0)
     if (tripped.nonEmpty) System.err.println(
-      s"[graft.Bench] TRIPWIRE: ${tripped.size} row(s) exceed ${tripK}x their " +
+      s"[graft.Bench] TRIPWIRE: ${tripped.size} row(s) exceed ${TripwireK}x their " +
       s"recorded clean minimum — ${tripped.take(5).map { case (k, r) => f"$k ($r%.2fx)" }
         .mkString(", ")}${if (tripped.size > 5) ", ..." else ""}; " +
       "treat this artifact's deltas with suspicion")

@@ -115,12 +115,10 @@ object TextDedup {
     * 10.3 s vs 18.8 s, and peak execution memory 53.5 GB vs 35.0 GB —
     * i.e. with the cache off-heap the join actually gets its execution
     * memory. On disk the sorted frame streams back at sequential-read
-    * speed; sf0.1-scale corpora don't care (80k-row cache).
-    * `SPARK_GRAFT_LSH_CACHE_LEVEL` overrides for experiments.
+    * speed; sf0.1-scale corpora don't care (80k-row cache). The
+    * storage-level lever was removed; the measured winner is a constant.
     */
-  private lazy val lshCacheLevel: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      sys.env.getOrElse("SPARK_GRAFT_LSH_CACHE_LEVEL", "DISK_ONLY"))
+  private val LshCacheLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY
 
   /** The capped, co-partitioned banded frame LSH candidate generation runs
     * on (round 17). ONE exchange: `banded` is hash-repartitioned by its
@@ -165,7 +163,7 @@ object TextDedup {
     val nParts = spark.sessionState.conf.numShufflePartitions
     val banded = banded0.repartition(nParts, keys.map(col): _*)
       .sortWithinPartitions(keys.map(col): _*)
-      .persist(lshCacheLevel)
+      .persist(LshCacheLevel)
     val sizes = banded.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__m"))
     val hot = sizes.filter(col("__m") > maxBucket)
     // loud accounting AND self-join sizing in ONE cheap job over the cached
@@ -1126,9 +1124,10 @@ object TextDedup {
 
   /** [[dedupSubstrings]] from PRECOMPUTED [[duplicateRuns]] output — the
     * production shape: the detection pass (the corpus-linear gram
-    * shuffle, ~1.1 M grams/s/node measured in tools/SubstringStress) runs
-    * ONCE, its runs frame is audited/persisted, and the purge reuses it
-    * instead of re-paying the shuffle inside its own plan. (Persisting
+    * shuffle, ~1.1 M grams/s/node measured with `tools/SubstringStress`,
+    * removed since; see git history) runs ONCE, its runs frame is
+    * audited/persisted, and the purge reuses it instead of re-paying the
+    * shuffle inside its own plan. (Persisting
     * the runs frame also lets the composed [[dedupSubstrings]] hit
     * Spark's cache-fragment matching, but an explicit parameter beats
     * relying on CacheManager recognizing the subtree.)
@@ -1417,10 +1416,10 @@ object TextDedup {
     * `bh` at scale so even a non-broadcast probe sort-merges with no index
     * exchange). The per-batch serving cost is one SCAN of each index table
     * — never a shuffle of either — so intake batch sizing is the
-    * amortization lever (tools/IntakeStress: 2.3 s per 10k-doc batch
-    * against a 1e6-doc index at local[32]). Signature parameters must
-    * match between index and [[dropCorpusNearDups]] — they key the band
-    * hashes.
+    * amortization lever (2.3 s per 10k-doc batch against a 1e6-doc index
+    * at local[32], measured with the since-removed `tools/IntakeStress`).
+    * Signature parameters must match between index and
+    * [[dropCorpusNearDups]] — they key the band hashes.
     *
     * INDEX FORMAT: `bh` is the 64-bit `xxhash64(band, slice)` band bucket
     * (LongType) since round 18. An index PERSISTED with the earlier

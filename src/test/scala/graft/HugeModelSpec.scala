@@ -25,28 +25,27 @@ class HugeModelSpec extends AnyFunSuite {
     assert(cube.get(Seq("m5", "m7") ++ Seq.fill(6)("All")).contains(expected2))
   }
 
-  test("packed-key build ≡ 8-int-column build (grouping-shape parity)") {
-    // round 19: the default build groups by ONE packed long (base-100
-    // digits, bijective) and counts; the pre-r19 shape groups by the 8 int
-    // columns and sums 1.0. Same facts by construction — pin it row-for-row
-    // at a row count no other suite memoizes.
-    val rows = 54321L
-    val packed = HugeModel.at(spark, rows).facts
-      .orderBy((0 until HugeModel.NDims).map(i => col(s"d$i")): _*)
-      .collect()
+  test("facts equal a plain 8-column group-by, row for row") {
+    // independent reference: the 8 leaf-id columns straight off the
+    // generator, grouped by plain Spark — no packed key, no decode. At a
+    // row count no other suite memoizes.
+    val n = 54321L
+    val keys = (0 until HugeModel.NDims).map(i => col(s"d$i"))
+    val facts = HugeModel.at(spark, n).facts
     try {
-      Seq("ints", "packed_sort").foreach { variant =>
-        System.setProperty("graft.huge.group", variant)
-        val other = HugeModel.rebuild(spark, rows).facts
-          .orderBy((0 until HugeModel.NDims).map(i => col(s"d$i")): _*)
-          .collect()
-        assert(packed.length == other.length, s"row count differs ($variant)")
-        packed.zip(other).foreach { case (p, n) => assert(p == n, s"($variant)") }
-      }
-    } finally {
-      System.clearProperty("graft.huge.group")
-      HugeModel.drop(rows)
-    }
+      val expected = spark.range(n)
+        .select((0 until HugeModel.NDims).map(i =>
+          (pmod(xxhash64(col("id"), lit(i)), lit(100)) + 1).cast("int").as(s"d$i")): _*)
+        .groupBy(keys: _*).agg(count(lit(1)).cast("double").as("value"))
+        .orderBy(keys: _*).collect()
+      val got = facts.select(keys :+ col("value"): _*).orderBy(keys: _*).collect()
+      assert(got.length == expected.length, "row count differs")
+      got.zip(expected).foreach { case (g, e) => assert(g == e) }
+      assert(got.map(_.getDouble(HugeModel.NDims)).sum == n.toDouble,
+        "cell values must sum to the generated row count")
+      assert(got.map(r => (0 until HugeModel.NDims).map(r.getInt)).distinct.length ==
+        got.length, "an address repeats")
+    } finally HugeModel.drop(n)
   }
 
   test("identity rollups skip the closure lookup; partial/weighted covers keep it") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The one profiling entry point for local perf iteration (round 18 folds
   * the accumulated scratch mains — WarmPerf/WarmPerf2/ScratchPerf/
-  * ScratchHuge8 — into this):
+  * ScratchHuge8 — into this; the former `graft.tools` mains are gone too):
   *
   *   Test/runMain graft.Profile warm  <gate…>   3 warmed passes per gate
   *   Test/runMain graft.Profile cold  <gate…>   1 cold-JVM pass per gate
@@ -12,16 +12,43 @@ import org.apache.spark.sql.SparkSession
   *   Test/runMain graft.Profile stages <gate>   per-stage metrics (run/cpu/
   *                                              gc/spill/shuffle) of a warm
   *                                              pass
-  *   Test/runMain graft.Profile huge8 [build|zstore|both] [passes]
-  *                                              1e8 variant harness (env:
-  *                                              SPARK_GRAFT_HUGE_GEN/SLICES/
-  *                                              PERSIST, SPARK_GRAFT_OFFHEAP,
-  *                                              SPARK_GRAFT_HUGE8_ROWS)
+  *   Test/runMain graft.Profile stream [gate…]  per-trigger progress of the
+  *                                              streaming twins, 2 passes
+  *   Test/runMain graft.Profile pairs8 [docs]   the huge8_pipe_minhash_pairs
+  *                                              body with per-stage metrics
+  *   Test/runMain graft.Profile minhash8 [passes] [docs]
+  *                                              the huge8_pipe_minhash body
+  *                                              with per-stage metrics
+  *   Test/runMain graft.Profile huge8 [build|zstore|both] [passes] [rows]
+  *                                              the 1e8 build / z-store rows
+  *                                              with per-stage metrics
   *
-  * `SP_SF` picks the testdata dir (default sf0.1). Numbers from this light
-  * context are for ITERATION; quote full-bench minima in records.
+  * `docs`/`rows` default to the bench's `Bench.Huge8Rows`; smaller values
+  * size the 1e8 modes down for iteration. `SP_SF` picks the testdata dir
+  * (default sf0.1). Numbers from this light context are for ITERATION;
+  * quote full-bench minima in records.
   */
 object Profile {
+  private val Modes = "warm|cold|plan|stages|stream|pairs8|minhash8|huge8"
+
+  /** Prints one line per completed stage of at least `minSec` seconds. */
+  private def logStages(spark: SparkSession, minSec: Double)(show: => Boolean): Unit =
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        val si = s.stageInfo
+        val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
+        val tm = si.taskMetrics
+        if (show && dur >= minSec) System.err.println(
+          f"[stage ${si.stageId}%3d] ${dur}%7.2f s tasks=${si.numTasks}%4d " +
+          f"run=${tm.executorRunTime / 1000.0}%7.1f cpu=${tm.executorCpuTime / 1e9}%7.1f " +
+          f"gc=${tm.jvmGCTime / 1000.0}%5.1f spillM=${tm.memoryBytesSpilled / 1048576}%6d " +
+          f"spillD=${tm.diskBytesSpilled / 1048576}%6d " +
+          f"in=${tm.inputMetrics.recordsRead}%10d shufR=${tm.shuffleReadMetrics.recordsRead}%10d " +
+          f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%10d  ${si.name.split("\n").head.take(60)}")
+      }
+    })
+
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("warm")
     val rest = args.drop(1).toSeq
@@ -50,20 +77,7 @@ object Profile {
         val name = rest.headOption.getOrElse("pipe_dedup_minhash")
         val spark = Bench.session()
         @volatile var show = false
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = if (show) {
-            val si = s.stageInfo
-            val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
-            val tm = si.taskMetrics
-            System.err.println(f"[stage ${si.stageId}%3d] ${dur}%6.2f s tasks=${si.numTasks}%4d " +
-              f"run=${tm.executorRunTime / 1000.0}%7.1f cpu=${tm.executorCpuTime / 1e9}%7.1f " +
-              f"gc=${tm.jvmGCTime / 1000.0}%5.1f spillM=${tm.memoryBytesSpilled / 1048576}%5d " +
-              f"spillD=${tm.diskBytesSpilled / 1048576}%5d " +
-              f"in=${tm.inputMetrics.recordsRead}%9d shufR=${tm.shuffleReadMetrics.recordsRead}%9d " +
-              f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%9d  ${si.name.split("\n").head.take(50)}")
-          }
-        })
+        logStages(spark, 0.0)(show)
         SparkEntry.queries(name)(spark, sfDir).count() // warm pass, unlisted
         show = true
         val t0 = System.nanoTime()
@@ -73,29 +87,13 @@ object Profile {
       case "pairs8" =>
         // the huge8_pipe_minhash_pairs body (Bench.scala 1e8 block), with
         // per-stage metrics — attribution for the suite's biggest row.
-        // SPARK_GRAFT_HUGE8_MINHASH_PAIR_DOCS sizes it down for iteration.
         import org.apache.spark.sql.functions.{col, concat, concat_ws, lit,
           pmod, when, xxhash64}
-        val docs8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_PAIR_DOCS",
-          "100000000").toLong
-        val parts = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_PARTS", "256").toInt
+        val docs8 = rest.headOption.map(_.toLong).getOrElse(Bench.Huge8Rows)
+        val parts = Bench.Huge8MinhashParts
         val spark = Bench.session()
         spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = s.stageInfo
-            val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
-            val tm = si.taskMetrics
-            if (dur >= 0.5) System.err.println(
-              f"[stage ${si.stageId}%3d] ${dur}%7.2f s tasks=${si.numTasks}%4d " +
-              f"run=${tm.executorRunTime / 1000.0}%7.1f cpu=${tm.executorCpuTime / 1e9}%7.1f " +
-              f"gc=${tm.jvmGCTime / 1000.0}%5.1f spillM=${tm.memoryBytesSpilled / 1048576}%6d " +
-              f"spillD=${tm.diskBytesSpilled / 1048576}%6d " +
-              f"in=${tm.inputMetrics.recordsRead}%10d shufR=${tm.shuffleReadMetrics.recordsRead}%10d " +
-              f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%10d  ${si.name.split("\n").head.take(60)}")
-          }
-        })
+        logStages(spark, 0.5)(true)
         val base = when(pmod(col("id"), lit(100)) === 99, col("id") - 1)
           .otherwise(col("id"))
         val docs = spark.range(0, docs8, 1, parts)
@@ -119,15 +117,6 @@ object Profile {
           Seq("rel_events_tumbling_stream", "rel_sessionize_stream",
             "rel_event_pairs_stream")
         val spark = Bench.session()
-        // A/B levers for this mode only (session conf, read by the twins)
-        sys.env.get("GRAFT_STREAM_NODATA").foreach(v =>
-          spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v))
-        sys.env.get("GRAFT_STREAM_ROCKSDB").foreach { _ =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-        }
         spark.streams.addListener(
           new org.apache.spark.sql.streaming.StreamingQueryListener {
             import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -160,24 +149,11 @@ object Profile {
         // adjudication harness for the r18 50.3-s-vs-37.9-min question.
         import org.apache.spark.sql.functions.{approx_count_distinct, array,
           col, concat, concat_ws, lit, pmod, posexplode, slice, xxhash64}
-        val docs8 = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_DOCS",
-          "100000000").toLong
-        val parts = sys.env.getOrElse("SPARK_GRAFT_HUGE8_MINHASH_PARTS", "256").toInt
         val passes = rest.headOption.map(_.toInt).getOrElse(3)
+        val docs8 = rest.drop(1).headOption.map(_.toLong).getOrElse(Bench.Huge8Rows)
+        val parts = Bench.Huge8MinhashParts
         val spark = Bench.session()
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = s.stageInfo
-            val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
-            val tm = si.taskMetrics
-            if (dur >= 0.5) System.err.println(
-              f"[stage ${si.stageId}%3d] ${dur}%7.2f s tasks=${si.numTasks}%4d " +
-              f"run=${tm.executorRunTime / 1000.0}%7.1f cpu=${tm.executorCpuTime / 1e9}%7.1f " +
-              f"gc=${tm.jvmGCTime / 1000.0}%5.1f spillM=${tm.memoryBytesSpilled / 1048576}%6d " +
-              f"spillD=${tm.diskBytesSpilled / 1048576}%6d  ${si.name.split("\n").head.take(60)}")
-          }
-        })
+        logStages(spark, 0.5)(true)
         (1 to passes).foreach { i =>
           val t0 = System.nanoTime()
           val docs = spark.range(0, docs8, 1, parts)
@@ -196,37 +172,14 @@ object Profile {
           println(f"[minhash8] pass$i ${(System.nanoTime() - t0) / 1e9}%8.2f s nb=$nb")
         }
         spark.stop()
-      case "hugeplan" =>
-        // explain("formatted") of the huge-model facts aggregation under
-        // the current group knob (SPARK_GRAFT_HUGE_GROUP / graft.huge.group)
-        // — the committable plan evidence for the huge_build rows.
-        val rows = sys.env.getOrElse("SPARK_GRAFT_HUGE8_ROWS", "100000000").toLong
-        val spark = Bench.session()
-        graft.tpch.HugeModel.factsFrame(spark, rows).explain("formatted")
-        spark.stop()
       case "huge8" =>
         val what = rest.headOption.getOrElse("build")
         val passes = rest.drop(1).headOption.map(_.toInt).getOrElse(2)
-        val rows = sys.env.getOrElse("SPARK_GRAFT_HUGE8_ROWS", "100000000").toLong
+        val rows = rest.drop(2).headOption.map(_.toLong).getOrElse(Bench.Huge8Rows)
         val spark = Bench.session()
-        // per-stage attribution (same shape as pairs8): where does the
-        // build row actually spend — generation+hash, exchange, final
-        // agg, or cache materialization?
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = s.stageInfo
-            val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
-            val tm = si.taskMetrics
-            if (dur >= 0.5) System.err.println(
-              f"[stage ${si.stageId}%3d] ${dur}%7.2f s tasks=${si.numTasks}%4d " +
-              f"run=${tm.executorRunTime / 1000.0}%7.1f cpu=${tm.executorCpuTime / 1e9}%7.1f " +
-              f"gc=${tm.jvmGCTime / 1000.0}%5.1f spillM=${tm.memoryBytesSpilled / 1048576}%6d " +
-              f"spillD=${tm.diskBytesSpilled / 1048576}%6d " +
-              f"shufR=${tm.shuffleReadMetrics.recordsRead}%10d " +
-              f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%10d  ${si.name.split("\n").head.take(60)}")
-          }
-        })
+        // per-stage attribution: where does the build row actually spend —
+        // generation+hash, exchange, final agg, or cache materialization?
+        logStages(spark, 0.5)(true)
         import scala.jdk.CollectionConverters._
         def gcMs: Long = java.lang.management.ManagementFactory
           .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
@@ -236,12 +189,7 @@ object Profile {
           println(f"[huge8] $name ${(System.nanoTime() - t0) / 1e9}%8.2f s " +
             f"gc=${gcMs - g0} ms")
         }
-        val variant = Seq("SPARK_GRAFT_HUGE_GEN", "SPARK_GRAFT_HUGE_SLICES",
-          "SPARK_GRAFT_HUGE_PERSIST", "SPARK_GRAFT_OFFHEAP", "SPARK_GRAFT_HUGE_GROUP")
-          .flatMap(k => sys.env.get(k).map(v => s"$k=$v")).mkString(" ") match {
-          case "" => "baseline"; case s => s
-        }
-        println(s"[huge8] variant: $variant rows=$rows what=$what")
+        println(s"[huge8] rows=$rows what=$what")
         // JIT warmup at 1e6 (untimed)
         graft.tpch.HugeModel.rebuild(spark, 1000000L)
         graft.tpch.HugeModel.drop(1000000L, blocking = true)
@@ -262,15 +210,14 @@ object Profile {
             val d = java.nio.file.Files.createTempDirectory("profile_z8").toString
             timed("huge8_pipe_zstore_build") {
               graft.pipeline.Layout.zorderWrite(spark, d, zframe(rows),
-                Seq(col("a"), col("b")), bits = 10, numFiles = 64); ()
+                Seq(col("a"), col("b")), bits = 10, numFiles = Bench.Huge8ZFiles); ()
             }
             org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
           }
         }
         spark.stop()
       case other =>
-        System.err.println(s"unknown Profile mode '$other' — " +
-          "use warm|cold|plan|stages|huge8")
+        System.err.println(s"unknown Profile mode '$other' — use $Modes")
     }
   }
 }
